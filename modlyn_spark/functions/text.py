@@ -1,10 +1,11 @@
 """Text analysis functions for large-scale training-data pipelines.
 
-All hot-path functions are JVM-side column expressions (whole-stage
+Most hot-path functions are JVM-side column expressions (whole-stage
 codegen, zero Python): token counting, quality scoring, language-ID
-heuristic, fingerprinting, character shingles, minhash signatures. Only
-simhash uses a (vectorized) pandas UDF, because its 64-lane bit-vote
-accumulator has no clean higher-order-function form.
+heuristic, fingerprinting, character shingles. MinHash signatures and
+simhash are Arrow-batched numpy maps: per-shingle hashing allocates one
+string per shingle inside higher-order functions, and simhash's 64-lane
+bit-vote accumulator has no clean higher-order-function form.
 
 Semantics are deliberately expressible in ANSI SQL so DuckDB can serve as
 the correctness oracle for each (same regexes, same stopword lists).
@@ -143,48 +144,19 @@ def _minhash_params(k: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signature(col: Column, k: int = 32, n: int = 3) -> Column:
-    """k-lane minhash over character n-gram shingles.
-
-    One xxhash64 per shingle, then k universal-hash mixes
-    ``(a_j * h + b_j) mod (2^31-1)`` — k multiply-mods instead of k full
-    hash evaluations per shingle (the standard MinHash construction).
-    Entirely JVM-side; products stay under 2^62 so ANSI mode never
-    overflows. Two documents' estimated Jaccard = fraction of equal lanes.
-    """
-    sh = char_shingles(col, n)
-    base = F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE31)))
-
-    def lane(a: int, b: int) -> Column:
-        # closure factory: PySpark infers lambda arity from the signature,
-        # so default-arg capture (lambda h, a=a: ...) would read as 2-ary.
-        # coalesce: empty shingle set (text shorter than n) -> the same
-        # sentinel lane value the numpy path emits, instead of NULL
-        return F.coalesce(
-            F.array_min(
-                F.transform(
-                    base, lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_MERSENNE31))
-                )
-            ),
-            F.lit(_MERSENNE31),
-        )
-
-    return F.array(*[lane(a, b) for (a, b) in _minhash_params(k)])
-
-
 def minhash_signature_udf(
     df: DataFrame, text_col: str, out_col: str = "sig", k: int = 32, n: int = 3
 ) -> DataFrame:
-    """Vectorized numpy MinHash (the fast path used by the dedup operators).
+    """k-lane MinHash over byte n-gram shingles, vectorized numpy (the
+    signature path of the dedup operators).
 
-    The JVM expression variant (``minhash_signature``) allocates one string
-    object per shingle per row inside higher-order functions — fine for
-    small corpora, allocation-bound at scale. Here each text's byte
-    n-grams are packed into integers directly (for n<=7 the packed value IS
-    the shingle — a perfect hash, zero collisions), deduplicated with
-    np.unique, and all k universal-hash lanes are computed as one
-    (shingles x k) matrix min. Arrow-batched; no per-row Python beyond the
-    packing loop over documents.
+    Each text's byte n-grams are packed into integers directly (for n<=7
+    the packed value IS the shingle — a perfect hash, zero collisions),
+    deduplicated with np.unique, and all k universal-hash lanes
+    ``(a_j * h + b_j) mod (2^31-1)`` are computed as one (shingles x k)
+    matrix min. Arrow-batched; no per-row Python beyond the packing loop
+    over documents. Two documents' estimated Jaccard = fraction of equal
+    lanes.
     """
     if n > 7:
         raise ValueError("packed byte n-grams support n <= 7")

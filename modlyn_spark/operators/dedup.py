@@ -8,10 +8,11 @@ Scale design notes (the 100 TB story):
 - n-gram Jaccard: EXACT Jaccard without a cross join, via an inverted
   shingle index: explode distinct shingles, self-join on shingle (pairs
   only share work where they share content), count common shingles c,
-  jaccard = c / (|A| + |B| - c). Skew guard: drop ultra-frequent shingles
-  (stop-shingles) before the self-join.
-- MinHash+LSH: k-lane signatures (JVM-side), banded bucketing; only
-  bucket-colliding pairs are candidates, verified by signature agreement.
+  jaccard = c / (|A| + |B| - c). Skew guard: exact two-sided chunk
+  salting of ultra-frequent shingles (stop-shingles).
+- MinHash+LSH: k-lane signatures (vectorized numpy UDF), banded
+  bucketing; only bucket-colliding pairs are candidates, verified by
+  signature agreement.
   Sub-quadratic: cost ~ sum over buckets of bucket^2, controlled by bands.
 - SimHash: 64-bit near-dup with hamming radius; Manku-style multi-block
   pigeonhole keys (radius r, m blocks: hashes within r agree on some
@@ -36,7 +37,6 @@ from pyspark.sql.types import DoubleType
 from modlyn_spark.functions.text import (
     char_shingles,
     doc_fingerprint,
-    minhash_signature,
     minhash_signature_udf,
     simhash64_udf,
 )
@@ -114,34 +114,106 @@ def _est_jaccard_col(sig1: str, sig2: str) -> Column:
 
 
 def _signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int, n: int, impl: str
+    df: DataFrame, id_col: str, text_col: str, k: int, n: int
 ) -> DataFrame:
-    """(did, sig) table via the chosen MinHash implementation: "numpy"
-    (vectorized Arrow UDF — the fast path) or "jvm" (pure column
-    expressions). Same estimator, different hash family.
+    """(did, sig) table of k-lane MinHash signatures (vectorized numpy UDF).
 
     Shingle-less documents (NULL text, or text shorter than n) are DROPPED
-    here: both implementations emit the same all-sentinel signature for
-    them, so without the filter every pair of contentless docs would
-    collide in every band and est-score 1.0 — while their exact Jaccard is
-    0 (empty sets). Dropping matches the exact inverted-index semantics
-    (no shingles -> no postings -> no pairs)."""
+    here: the UDF emits the same all-sentinel signature for them, so
+    without the filter every pair of contentless docs would collide in
+    every band and est-score 1.0 — while their exact Jaccard is 0 (empty
+    sets). Dropping matches the exact inverted-index semantics (no
+    shingles -> no postings -> no pairs)."""
     from modlyn_spark.functions.text import _MERSENNE31
 
     # signature building is the CPU-bound per-byte stage: make sure an
     # under-partitioned source (single-row-group file) doesn't serialize it
     src = ensure_parallelism(df.select(F.col(id_col).alias("did"), text_col))
-    if impl == "numpy":
-        sig = minhash_signature_udf(src, text_col, "sig", k=k, n=n).select(
-            "did", "sig"
-        )
-    else:
-        sig = src.select(
-            "did",
-            minhash_signature(F.col(text_col), k=k, n=n).alias("sig"),
-        )
+    sig = minhash_signature_udf(src, text_col, "sig", k=k, n=n).select(
+        "did", "sig"
+    )
     sentinel = F.array(*[F.lit(_MERSENNE31)] * k)
     return sig.where(F.col("sig").isNotNull() & (F.col("sig") != sentinel))
+
+
+def _band_keys(sig: DataFrame, k: int, bands: int) -> DataFrame:
+    """(did, bh): one row per (document, LSH band) of a (did, sig) table,
+    bh = xxhash64 of the band index and that band's k/bands lanes. The
+    band index is baked into the key, so ONE equi-join on bh finds
+    collisions in any band — the banding rule every MinHash operator here
+    shares, so self-join and cross-join candidates cannot drift apart."""
+    rows_per_band = k // bands
+    return sig.select(
+        "did",
+        F.explode(
+            F.array(
+                *[
+                    F.xxhash64(
+                        F.lit(b),
+                        *[
+                            F.col("sig")[i]
+                            for i in range(b * rows_per_band, (b + 1) * rows_per_band)
+                        ],
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bh"),
+    )
+
+
+def _chunk_salted(
+    left: DataFrame,
+    right: DataFrame,
+    counts: DataFrame,
+    key: str,
+    chunk: int,
+    left_hash: Column,
+    right_hash: Column,
+) -> tuple[DataFrame, DataFrame]:
+    """EXACTNESS-PRESERVING two-sided chunk salting of an equi-join on
+    ``key``: a key shared by f rows forces ~f^2 pairs — inherent to exact
+    semantics — but landing them on ONE reducer is not.
+
+    ``counts`` is (key, count), the caller's per-key join cardinality;
+    keys with count > ``chunk`` get m = ceil(count / chunk) through one
+    broadcast left join (every other key m = 1). Each row takes chunk
+    c = pmod(hash, m) from its side's hash column; the left side
+    replicates to (kx, ky) = (c, 0..m-1), the right to (0..m-1, c). Joined
+    on (key, kx, ky), every pair meets on exactly one of the key's m^2
+    sub-keys, each carrying ~chunk^2 pairs: output identical to the
+    unsalted join, replication m on hot rows only. Both sides read m from
+    the same counts, so they agree on it per key."""
+    hot = counts.where(F.col("count") > chunk).select(
+        key, F.ceil(F.col("count") / chunk).cast("int").alias("m")
+    )
+
+    def salt(d: DataFrame, h: Column, mine_first: bool) -> DataFrame:
+        s = d.join(F.broadcast(hot), key, "left").withColumn(
+            "m", F.coalesce("m", F.lit(1))
+        )
+        c = F.pmod(h, F.col("m")).cast("int")
+        o = F.explode(F.sequence(F.lit(0), F.col("m") - 1))
+        kx, ky = (c, o) if mine_first else (o, c)
+        return s.select(*d.columns, kx.alias("kx"), ky.alias("ky"))
+
+    return salt(left, left_hash, True), salt(right, right_hash, False)
+
+
+def _candidate_docs(
+    df: DataFrame, id_col: str, cand: DataFrame, *cand_cols: str
+) -> DataFrame:
+    """Rows of ``df`` whose ``id_col`` appears in any of ``cand``'s
+    ``cand_cols`` — a left-semi restriction, so per-document work that
+    Catalyst cannot prune through a mapInPandas (shingle packing, K-gram
+    explode) runs on candidate documents only. The candidate ids take the
+    reserved alias ``__cand_id``: an id_col literally named like a
+    candidate column ("did", "cid") would otherwise make the semi-join
+    condition self-referential."""
+    ids = cand.select(F.col(cand_cols[0]).alias("__cand_id"))
+    for c in cand_cols[1:]:
+        ids = ids.unionByName(cand.select(F.col(c).alias("__cand_id")))
+    return df.join(ids.distinct(), df[id_col] == F.col("__cand_id"), "left_semi")
 
 
 def dedup_exact(
@@ -181,31 +253,18 @@ def ngram_jaccard_pairs(
     *,
     n: int = 3,
     threshold: float = 0.8,
-    max_shingle_freq: int | None = None,
     hot_shingle_chunk: int | None = 4096,
 ) -> DataFrame:
     """Exact character-n-gram Jaccard similar pairs via inverted index.
 
     Returns (id1, id2, jaccard) with id1 < id2 and jaccard >= threshold.
 
-    Skew guards, in order of preference:
-
-    ``hot_shingle_chunk`` (default ON at 4096): EXACTNESS-PRESERVING
-    balancing for stop-shingles. A shingle shared by f documents forces
-    f^2/2 candidate pairs — that work is inherent to exact semantics, but
-    landing it on ONE reducer key is not. Shingles with f > chunk get
-    two-sided chunk salting: each posting is assigned a chunk
-    c = hash(doc) mod m (m = ceil(f/chunk)); the left side replicates to
-    keys (s, c, j) for all j, the right side to (s, i, c) for all i, so
-    every pair meets on exactly one of m^2 keys carrying ~chunk^2 pairs.
-    Replication factor is m on hot postings only; output is identical to
-    the unsalted join.
-
-    ``max_shingle_freq``: LOSSY cutoff — drops shingles above the
-    frequency cap entirely before the join. Jaccard becomes a lower bound
-    (pairs sharing only ultra-common shingles are missed). Use when
-    stop-shingle pair volume itself (not its distribution) is the
-    bottleneck; leave None for exact semantics.
+    ``hot_shingle_chunk`` (default ON at 4096): exactness-preserving skew
+    guard for stop-shingles — postings of a shingle shared by more than
+    chunk documents get two-sided chunk salting on hash(doc)
+    (``_chunk_salted``), so its ~f^2/2 candidate pairs spread over m^2
+    reducer keys instead of one. Output is identical to the unsalted join
+    (None).
     """
     sh = ensure_parallelism(
         df.select(
@@ -215,37 +274,15 @@ def ngram_jaccard_pairs(
     ).withColumn("sz", F.size("sh"))
     sizes = sh.select("did", "sz")
     inv = sh.select("did", F.explode("sh").alias("s"))
-    if max_shingle_freq is not None:
-        freq = inv.groupBy("s").count().where(F.col("count") <= max_shingle_freq)
-        inv = inv.join(F.broadcast(freq.select("s")), "s")
+    a, b, join_keys = inv, inv, ["s"]
     if hot_shingle_chunk is not None:
-        hot = (
-            inv.groupBy("s")
-            .count()
-            .where(F.col("count") > hot_shingle_chunk)
-            .select(
-                "s",
-                F.ceil(F.col("count") / hot_shingle_chunk).cast("int").alias("m"),
-            )
-        )
-        salted = inv.join(F.broadcast(hot), "s", "left").withColumn(
-            "m", F.coalesce("m", F.lit(1))
-        )
-        chunk = F.pmod(F.xxhash64("did"), F.col("m")).cast("int")
-        others = F.explode(F.sequence(F.lit(0), F.col("m") - 1))
-        a = salted.select(
-            F.col("did").alias("id1"), "s",
-            chunk.alias("kx"), others.alias("ky"),
-        )
-        b = salted.select(
-            F.col("did").alias("id2"), "s",
-            others.alias("kx"), chunk.alias("ky"),
+        h = F.xxhash64("did")
+        a, b = _chunk_salted(
+            inv, inv, inv.groupBy("s").count(), "s", hot_shingle_chunk, h, h
         )
         join_keys = ["s", "kx", "ky"]
-    else:
-        a = inv.select(F.col("did").alias("id1"), "s")
-        b = inv.select(F.col("did").alias("id2"), "s")
-        join_keys = ["s"]
+    a = a.withColumnRenamed("did", "id1")
+    b = b.withColumnRenamed("did", "id2")
     common = (
         a.join(b, join_keys)
         .where(F.col("id1") < F.col("id2"))
@@ -277,7 +314,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     n: int = 3,
     threshold: float = 0.7,
-    impl: str = "numpy",
 ) -> DataFrame:
     """MinHash + banded LSH near-duplicate pairs.
 
@@ -286,31 +322,14 @@ def minhash_lsh_pairs(
     (estimated Jaccard) and filtered at ``threshold``.
     Returns (id1, id2, est_jaccard).
     """
-    rows_per_band = k // bands
-    sig = _signatures(df, id_col, text_col, k, n, impl).cache()
+    sig = _signatures(df, id_col, text_col, k, n).cache()
     # CANDIDATES TRAVEL LIGHT: the banded self-join and the pair dedup move
     # only (id, band-hash) / (id1, id2) — never the k-lane signatures. An
     # earlier formulation carried both 64-lane arrays through the join and
     # dropDuplicates, turning a noisy corpus's millions of candidate pairs
     # into gigabytes of shuffle; signatures are joined back exactly once
     # per DISTINCT pair (band index is baked into the bucket hash).
-    banded = sig.select(
-        "did",
-        F.explode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        *[
-                            F.col("sig")[i]
-                            for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                        ],
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bh"),
-    )
+    banded = _band_keys(sig, k, bands)
     a = banded.select(F.col("did").alias("id1"), "bh")
     b = banded.select(F.col("did").alias("id2"), "bh")
     cand = (
@@ -338,7 +357,6 @@ def minhash_dedup_groups(
     bands: int = 4,
     n: int = 3,
     threshold: float = 0.9,
-    impl: str = "numpy",
 ) -> DataFrame:
     """Scalable near-duplicate GROUPING via MinHash-LSH star edges.
 
@@ -365,27 +383,8 @@ def minhash_dedup_groups(
     Transitive chains collapse to the chain's bucket-level minimum; like all
     LSH dedup this is approximate — recall rises with ``bands``.
     """
-    from pyspark.sql import Window
-
-    rows_per_band = k // bands
-    sig = _signatures(df, id_col, text_col, k, n, impl).cache()
-    banded = sig.select(
-        "did",
-        F.explode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        *[
-                            F.col("sig")[i]
-                            for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                        ],
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bh"),
-    )
+    sig = _signatures(df, id_col, text_col, k, n).cache()
+    banded = _band_keys(sig, k, bands)
     reps = banded.groupBy("bh").agg(F.min("did").alias("rep"))
     edges = (
         banded.join(reps, "bh")
@@ -394,13 +393,10 @@ def minhash_dedup_groups(
         .dropDuplicates(["did", "rep"])
     )
     rep_sig = sig.select(F.col("did").alias("rep"), F.col("sig").alias("rep_sig"))
-    est = F.size(
-        F.filter(F.zip_with("sig", "rep_sig", lambda x, y: x == y), lambda eq: eq)
-    ) / F.lit(float(k))
     verified = (
         edges.join(sig, "did")
         .join(rep_sig, "rep")
-        .select("did", "rep", est.alias("est_jaccard"))
+        .select("did", "rep", _est_jaccard_col("sig", "rep_sig").alias("est_jaccard"))
         .where(F.col("est_jaccard") >= threshold)
     )
     w2 = Window.partitionBy("did").orderBy(F.col("rep").asc())
@@ -666,16 +662,20 @@ def _packed_shingle_arrays(
     df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
     """(did, psh): each document's DISTINCT character n-grams packed into
-    sorted int64s — n codepoints x 21 bits (n <= 3 fits 63 bits), a
-    bijection with the character-shingle set, so set sizes and
-    intersections are exactly those of ``char_shingles``. Codepoints (not
-    utf-8 bytes) keep the bijection on non-ASCII text; lowercasing happens
-    JVM-side (F.lower) BEFORE the UDF so locale-sensitive mappings (Greek
-    final sigma etc.) match the string-shingle path exactly; NULL text
-    packs to the empty set, exactly like char_shingles on NULL."""
+    sorted int64s — n codepoints x 21 bits, a bijection with the
+    character-shingle set, so set sizes and intersections are exactly
+    those of ``char_shingles``. Only n <= 3 fits 63 bits: at n = 4 the top
+    shift reaches 63 and packing wraps, colliding distinct shingles, so
+    larger n raises. Codepoints (not utf-8 bytes) keep the bijection on
+    non-ASCII text; lowercasing happens JVM-side (F.lower) BEFORE the UDF
+    so locale-sensitive mappings (Greek final sigma etc.) match the
+    string-shingle path exactly; NULL text packs to the empty set, exactly
+    like char_shingles on NULL."""
     from pyspark.sql.types import ArrayType as _Arr, LongType as _Long
     from pyspark.sql.types import StructField as _SF, StructType as _ST
 
+    if not 1 <= n <= 3:
+        raise ValueError("packed codepoint shingles support 1 <= n <= 3")
     schema = _ST([df.schema[id_col], _SF("psh", _Arr(_Long()))])
 
     def run(batches):
@@ -725,26 +725,15 @@ def _verify_pairs_exact_jaccard(
     pair space; every emitted pair carries the exact similarity, so
     precision is 1.0 by construction and recall is the only approximation.
     Shingle sets are joined in for candidates only — O(|candidates|)
-    intersections, never O(n^2) — and travel as packed sorted int64
-    arrays when n <= 3 (bijective with the string shingles, ~4x lighter
-    through the two joins, intersected vectorized); the string-array path
-    is the n > 3 fallback.
+    intersections, never O(n^2) — as packed sorted int64 arrays
+    (``_packed_shingle_arrays``: bijective with the string shingles, ~4x
+    lighter through the two joins; n <= 3).
     """
-    if n <= 3:
-        sh = _packed_shingle_arrays(df, id_col, text_col, n)
-        p1 = sh.select(F.col("did").alias("id1"), F.col("psh").alias("psh1"))
-        p2 = sh.select(F.col("did").alias("id2"), F.col("psh").alias("psh2"))
-        return _jaccard_verified(
-            cand.join(p1, "id1").join(p2, "id2"), threshold, ["id1", "id2"]
-        )
-    sh = df.select(
-        F.col(id_col).alias("did"),
-        char_shingles(F.col(text_col), n).alias("sh"),
-    )
-    s1 = sh.select(F.col("did").alias("id1"), F.col("sh").alias("psh1"))
-    s2 = sh.select(F.col("did").alias("id2"), F.col("sh").alias("psh2"))
+    sh = _packed_shingle_arrays(df, id_col, text_col, n)
+    p1 = sh.select(F.col("did").alias("id1"), F.col("psh").alias("psh1"))
+    p2 = sh.select(F.col("did").alias("id2"), F.col("psh").alias("psh2"))
     return _jaccard_verified(
-        cand.join(s1, "id1").join(s2, "id2"), threshold, ["id1", "id2"]
+        cand.join(p1, "id1").join(p2, "id2"), threshold, ["id1", "id2"]
     )
 
 
@@ -758,7 +747,6 @@ def minhash_near_dup_pairs(
     n: int = 3,
     threshold: float = 0.8,
     est_margin: float = 0.15,
-    impl: str = "numpy",
 ) -> DataFrame:
     """MinHash-LSH candidates verified by EXACT n-gram Jaccard.
 
@@ -784,7 +772,7 @@ def minhash_near_dup_pairs(
     """
     cand = minhash_lsh_pairs(
         df, id_col, text_col, k=k, bands=bands, n=n,
-        threshold=max(threshold - est_margin, 0.0), impl=impl,
+        threshold=max(threshold - est_margin, 0.0),
     ).select("id1", "id2")
     return _verify_pairs_exact_jaccard(
         df, cand, id_col, text_col, n=n, threshold=threshold
@@ -825,7 +813,6 @@ def minhash_contamination(
     n: int = 3,
     threshold: float = 0.8,
     est_margin: float = 0.15,
-    impl: str = "numpy",
     eager: bool = True,
 ) -> DataFrame:
     """CROSS-corpus near-duplicate detection — the benchmark-contamination
@@ -854,34 +841,12 @@ def minhash_contamination(
     # cache: each signature table feeds the banded join AND the est
     # pre-filter join — uncached, the per-byte MinHash UDF would run twice
     # over each corpus
-    csig = _signatures(corpus, id_col, text_col, k, n, impl).cache()
-    psig = _signatures(probe, id_col, text_col, k, n, impl).cache()
-    rows_per_band = k // bands
-
-    def banded(sig: DataFrame, out_id: str) -> DataFrame:
-        return sig.select(
-            F.col("did").alias(out_id),
-            F.explode(
-                F.array(
-                    *[
-                        F.xxhash64(
-                            F.lit(b),
-                            *[
-                                F.col("sig")[i]
-                                for i in range(
-                                    b * rows_per_band, (b + 1) * rows_per_band
-                                )
-                            ],
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bh"),
-        )
-
+    csig = _signatures(corpus, id_col, text_col, k, n).cache()
+    psig = _signatures(probe, id_col, text_col, k, n).cache()
     cand = (
-        banded(csig, "corpus_id")
-        .join(banded(psig, "probe_id"), "bh")
+        _band_keys(csig, k, bands)
+        .withColumnRenamed("did", "corpus_id")
+        .join(_band_keys(psig, k, bands).withColumnRenamed("did", "probe_id"), "bh")
         .select("corpus_id", "probe_id")
         .dropDuplicates(["corpus_id", "probe_id"])
     )
@@ -902,25 +867,11 @@ def minhash_contamination(
     # packing UDF cannot be pruned by Catalyst through mapInPandas, so
     # without the left-semi the whole training corpus would be packed to
     # verify a handful of pairs
-    # reserved probe-side alias: a caller whose id_col is literally named
-    # "did" would otherwise make the semi-join condition self-referential
-    c_docs = cand.select(F.col("corpus_id").alias("__cand_id")).distinct()
-    p_docs = cand.select(F.col("probe_id").alias("__cand_id")).distinct()
     csh = _packed_shingle_arrays(
-        corpus.join(
-            c_docs, corpus[id_col] == F.col("__cand_id"), "left_semi"
-        ),
-        id_col,
-        text_col,
-        n,
+        _candidate_docs(corpus, id_col, cand, "corpus_id"), id_col, text_col, n
     ).select(F.col("did").alias("corpus_id"), F.col("psh").alias("psh1"))
     psh = _packed_shingle_arrays(
-        probe.join(
-            p_docs, probe[id_col] == F.col("__cand_id"), "left_semi"
-        ),
-        id_col,
-        text_col,
-        n,
+        _candidate_docs(probe, id_col, cand, "probe_id"), id_col, text_col, n
     ).select(F.col("did").alias("probe_id"), F.col("psh").alias("psh2"))
     out = _jaccard_verified(
         cand.join(csh, "corpus_id").join(psh, "probe_id"),

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from modlyn_spark.operators.dedup import _chunk_salted
 from modlyn_spark.session import ensure_parallelism
 
 _TOKEN_SPLIT = "\\s+"
@@ -80,12 +81,10 @@ def linked_pairs(
     guard, the dedup inverted-index pattern — a natural-language corpus
     concentrates block keys on common low tokens, and a hot block's
     pairs would all land on ONE reducer running the O(len²) distances
-    serially. Blocks with > chunk rows get two-sided chunk salting:
-    each row takes chunk c = hash(id) mod m (m = ceil(count / chunk)),
-    the left side replicates to (c, 0..m−1), the right to (0..m−1, c),
-    so every pair meets on exactly one of the m² keys carrying
-    ~chunk² distances. Identical output to the unsalted join
-    (pytest-pinned); None disables.
+    serially. Blocks with > chunk rows get two-sided chunk salting on
+    hash(id) (``dedup._chunk_salted``), so every pair meets on exactly
+    one of m² keys carrying ~chunk² distances. Identical output to the
+    unsalted join (pytest-pinned); None disables.
 
     The threshold predicate is pushed by Catalyst into the join
     condition, so the per-candidate ``levenshtein`` runs once where the
@@ -119,10 +118,8 @@ def linked_pairs(
     right = prep(other if other is not None else df, "2")
     join_keys = ["bk"]
     if hot_block_chunk is not None:
-        chunk_n = int(hot_block_chunk)
         # block cardinality from the larger join input drives m; both
-        # sides must agree on m per key, so compute it once and
-        # broadcast (block-key count is bounded by distinct keys).
+        # sides must agree on m per key, so it is computed once.
         # Self mode: both sides are the SAME prep, so count one side and
         # double — identical counts (hence identical hot set and m) for
         # half the aggregation input, and the normalize/block pass runs
@@ -140,26 +137,11 @@ def linked_pairs(
                 .groupBy("bk")
                 .count()
             )
-        hot = counts.where(F.col("count") > chunk_n).select(
-            "bk",
-            F.ceil(F.col("count") / chunk_n).cast("int").alias("m"),
+        left, right = _chunk_salted(
+            left, right, counts, "bk", int(hot_block_chunk),
+            F.xxhash64(F.col("id1").cast("string")),
+            F.xxhash64(F.col("id2").cast("string")),
         )
-
-        def salt(d: DataFrame, idc: str, mine_first: bool) -> DataFrame:
-            s = d.join(F.broadcast(hot), "bk", "left").withColumn(
-                "m", F.coalesce("m", F.lit(1))
-            )
-            c = F.pmod(F.xxhash64(F.col(idc).cast("string")), F.col("m")).cast(
-                "int"
-            )
-            o = F.explode(F.sequence(F.lit(0), F.col("m") - 1))
-            kx, ky = (c, o) if mine_first else (o, c)
-            return s.select(
-                *d.columns, kx.alias("kx"), ky.alias("ky")
-            ).drop("m")
-
-        left = salt(left, "id1", True)
-        right = salt(right, "id2", False)
         join_keys = ["bk", "kx", "ky"]
     cand = left.join(right, on=join_keys)
     if other is None:

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from modlyn_spark.functions.text import _fnv1a64_batch
+from modlyn_spark.operators.dedup import _candidate_docs
 from modlyn_spark.session import ensure_parallelism
 
 _B = np.uint64(1099511628211)  # FNV prime as the rolling-hash base
@@ -198,20 +199,8 @@ def span_dup_pairs(
     )
 
     # exact verify on K-gram STRINGS, restricted to candidate documents
-    # reserved alias: id_col literally named "cid"/"did" must not make the
-    # semi-join condition self-referential
-    cand_docs = (
-        cand.select(F.col("id1").alias("__cand_id"))
-        .unionByName(cand.select(F.col("id2").alias("__cand_id")))
-        .distinct()
-    )
     grams = _kgram_strings(
-        df.join(
-            cand_docs, df[id_col] == F.col("__cand_id"), "left_semi"
-        ),
-        id_col,
-        text_col,
-        K,
+        _candidate_docs(df, id_col, cand, "id1", "id2"), id_col, text_col, K
     )
     # single-exchange self-join (the hash_hamming_pairs rule): both sides
     # are ONE gram table repartitioned by the join key, so the semi-join +
@@ -220,6 +209,10 @@ def span_dup_pairs(
     # behind the other's broadcast build — measured 2.0s -> 1.45s warm at
     # sf0.1 with identical output, and at corpus scale the gram table
     # cannot broadcast at all.
+    # Skew boundary: a boilerplate K-gram shared by n candidate docs puts
+    # n rows on one gram key, i.e. n^2 joined rows on ONE reducer after the
+    # repartition. Only the candidate-doc semi-join above bounds n; no
+    # salting applies here.
     g = grams.repartition(F.col("gram"))
     shared = (
         g.alias("a")
@@ -282,24 +275,10 @@ def span_contamination(
     )
 
     cg = _kgram_strings(
-        corpus.join(
-            cand.select(F.col("corpus_id").alias("__cand_id")).distinct(),
-            corpus[id_col] == F.col("__cand_id"),
-            "left_semi",
-        ),
-        id_col,
-        text_col,
-        K,
+        _candidate_docs(corpus, id_col, cand, "corpus_id"), id_col, text_col, K
     ).select(F.col("did").alias("corpus_id"), "gram")
     pg = _kgram_strings(
-        probe.join(
-            cand.select(F.col("probe_id").alias("__cand_id")).distinct(),
-            probe[id_col] == F.col("__cand_id"),
-            "left_semi",
-        ),
-        id_col,
-        text_col,
-        K,
+        _candidate_docs(probe, id_col, cand, "probe_id"), id_col, text_col, K
     ).select(F.col("did").alias("probe_id"), "gram")
     shared = (
         cg.join(pg, "gram")

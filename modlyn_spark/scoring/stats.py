@@ -5,21 +5,12 @@ scoring path the reference quickstart compares against (SURVEY.md N2;
 reference: docs/quickstart.ipynb cells 1335d6d3 / 8c058e6c), and the
 building block for the count-matrix statistics the north_rule mandates.
 
-Two physical strategies for the stats:
-
-``partial``
-    Scale path: one ``mapInPandas`` pass emits per-input-partition per-class
-    moment partials (n, sum[d], sumsq[d]) — numpy-vectorized over Arrow
-    batches, output is tiny (n_partitions x n_classes rows) — then a
-    ``groupBy(label)`` combine and a ``posexplode`` to long form. This is the
-    map-side-combined tree aggregation the north_star names: the wide shuffle
-    moves only moment vectors, never rows.
-
-``explode``
-    Parity path: ``posexplode(features)`` then a plain
-    ``groupBy(label, pos)`` aggregate. Shuffles n*d rows, but is pure
-    Catalyst SQL — used for the DuckDB oracle cross-check and as a reference
-    for the partial path.
+The stats take one ``mapInPandas`` pass that emits per-input-partition
+per-class moment partials (n, sum[d], sumsq[d]) — numpy-vectorized over
+Arrow batches, output is tiny (n_partitions x n_classes rows) — then a
+``groupBy(label)`` combine and a ``posexplode`` to long form. This is the
+map-side-combined tree aggregation the north_star names: the wide shuffle
+moves only moment vectors, never rows.
 
 Label encoding mirrors sklearn.LabelEncoder (classes sorted ascending;
 reference: modlyn/models/_simple_logreg_datamodule.py:85-88).
@@ -64,7 +55,6 @@ def class_feature_stats(
     df: DataFrame,
     label_col: str,
     features_col: str = "features",
-    strategy: str = "partial",
 ) -> DataFrame:
     """Long-form per-class per-feature statistics.
 
@@ -73,19 +63,6 @@ def class_feature_stats(
     (matches numpy's default ddof=0, which the oracle and scanpy-style
     scoring use).
     """
-    if strategy == "explode":
-        ex = df.select(
-            F.col(label_col).alias("label"),
-            F.posexplode(features_col).alias("pos", "x"),
-        ).select("label", "pos", F.col("x").cast("double").alias("x"))
-        return ex.groupBy("label", "pos").agg(
-            F.count("x").alias("n"),
-            F.avg("x").alias("mean"),
-            F.coalesce(F.var_pop("x"), F.lit(0.0)).alias("var_pop"),
-        )
-    if strategy != "partial":
-        raise ValueError(f"unknown strategy {strategy!r}")
-
     partial_schema = StructType(
         [
             StructField("label", StringType()),

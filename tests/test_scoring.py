@@ -47,12 +47,11 @@ def _spark_df(spark, pdf):
     return spark.createDataFrame(pdf)
 
 
-@pytest.mark.parametrize("strategy", ["partial", "explode"])
-def test_class_feature_stats(spark, matrix_pdf, strategy):
+def test_class_feature_stats(spark, matrix_pdf):
     pdf, X, labels = matrix_pdf
     df = _spark_df(spark, pdf)
     got = (
-        class_feature_stats(df, "label", "features", strategy=strategy)
+        class_feature_stats(df, "label", "features")
         .toPandas()
         .sort_values(["label", "pos"])
         .reset_index(drop=True)
@@ -67,7 +66,7 @@ def test_class_feature_stats(spark, matrix_pdf, strategy):
 def test_f_statistic(spark, matrix_pdf):
     pdf, X, labels = matrix_pdf
     df = _spark_df(spark, pdf)
-    stats = class_feature_stats(df, "label", "features", strategy="partial")
+    stats = class_feature_stats(df, "label", "features")
     got = f_statistic(stats).toPandas().sort_values("pos").reset_index(drop=True)
     exp = oracle_f_statistic(X, labels)
     assert np.allclose(got["f_stat"], exp["f_stat"])
@@ -213,7 +212,7 @@ def test_compare_scores_three_methods(spark, matrix_pdf):
 
     pdf, X, labels = matrix_pdf
     df = _spark_df(spark, pdf)
-    stats = class_feature_stats(df, "label", "features", strategy="partial")
+    stats = class_feature_stats(df, "label", "features")
     m_mean = stats.select(
         F.lit("mean").alias("method"), "label", "pos",
         F.col("mean").alias("score"),

@@ -527,3 +527,55 @@ def test_minhash_contamination_vs_duckdb_exact(spark):
     assert (got["corpus_id"].values == exp["corpus_id"].values).all()
     assert (got["probe_id"].values == exp["probe_id"].values).all()
     assert np.allclose(got["j"].values, exp["j"].values)
+
+
+def test_packed_shingle_verify_rejects_n_above_3(spark):
+    """Packing n codepoints at 21 bits each wraps int64 from n = 4 on, so
+    distinct shingles would collide: both packed-verify operators raise
+    instead of returning wrong Jaccard values."""
+    from modlyn_spark.operators.dedup import (
+        minhash_contamination,
+        minhash_near_dup_pairs,
+    )
+
+    df = spark.createDataFrame([(0, "some text"), (1, "some text!")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="n <= 3"):
+        minhash_near_dup_pairs(df, "doc_id", "text", n=4)
+    with pytest.raises(ValueError, match="n <= 3"):
+        minhash_contamination(df, df, "doc_id", "text", n=4)
+    spark.catalog.clearCache()
+
+
+def test_contamination_self_probe_equals_near_dup_pairs(spark, docs):
+    """The cross-join path and the self-join path band signatures with the
+    same keys: probing a corpus against itself returns every
+    minhash_near_dup_pairs pair in both orientations, plus (i, i) for each
+    doc with at least n codepoints — nothing else. k=32/bands=4 at 0.5 is
+    a low-recall banding, so drifting band keys change the pair sets."""
+    from modlyn_spark.operators.dedup import (
+        minhash_contamination,
+        minhash_near_dup_pairs,
+    )
+
+    src = docs.select("doc_id", "text")
+    planted = spark.createDataFrame(
+        [(r.doc_id + 1_000_000, r.text[: len(r.text) * 3 // 4] + " tail")
+         for r in src.limit(20).collect()]
+        + [(2_000_000, None), (2_000_001, "ab"), (2_000_002, "abc")],
+        "doc_id long, text string",
+    )
+    corpus = src.unionByName(planted)
+    kw = dict(k=32, bands=4, n=3, threshold=0.5)
+    pairs = minhash_near_dup_pairs(corpus, "doc_id", "text", **kw).collect()
+    cross = minhash_contamination(corpus, corpus, "doc_id", "text", **kw).collect()
+
+    expected = {(r["id1"], r["id2"]) for r in pairs}
+    expected |= {(b, a) for a, b in expected}
+    expected |= {
+        (r["doc_id"], r["doc_id"])
+        for r in corpus.where(F.length(F.lower("text")) >= 3).collect()
+    }
+    got = [(r["corpus_id"], r["probe_id"]) for r in cross]
+    assert len(got) == len(set(got))
+    assert set(got) == expected
+    assert len(pairs) >= 20  # the planted near-dups take part
