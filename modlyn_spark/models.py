@@ -161,17 +161,19 @@ class SimpleLogReg:
                 }
             )
 
-        self._model.fit(
-            enc,
-            features_col=self.features_col,
-            label_idx_col=f"{self.label_column}_idx",
-            n_batches=n_batches,
-            max_steps=max_steps,
-            max_epochs=max_epochs,
-            epoch_callback=on_epoch_end,
-        )
-        if val_enc is not None:
-            val_enc.unpersist()
+        try:
+            self._model.fit(
+                enc,
+                features_col=self.features_col,
+                label_idx_col=f"{self.label_column}_idx",
+                n_batches=n_batches,
+                max_steps=max_steps,
+                max_epochs=max_epochs,
+                epoch_callback=on_epoch_end,
+            )
+        finally:
+            if val_enc is not None:
+                val_enc.unpersist()
         return self
 
     @property

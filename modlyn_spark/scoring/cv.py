@@ -14,22 +14,21 @@ regularizer:
   in pandas/DuckDB, independent of the batch hash — a shared hash would
   correlate fold membership with batch membership and starve some
   (batch, fold) cells);
-- per step, ONE stacked GEMM computes all F models' logits; model f's
+- per step, the one shared stacked trainer (scoring/logreg.py:
+  _fit_stacked) computes all F models' logits with ONE GEMM; model f's
   gradient masks out its own fold's rows and normalizes by ITS visible
-  row count, so model f's trajectory is exactly a standalone trainer run
+  row count, and per-partition partials meet in the pid-sorted driver
+  combine, so model f's trajectory is exactly a standalone trainer run
   on ``fold != f`` with the same batch assignment (pytest pins allclose
   per fold against both the standalone engine and the numpy twin);
 - out-of-fold prediction scores each row with the model that NEVER saw
   it — the leakage-free evaluation table (the north_rule's zero-leakage
   invariant, applied to model selection).
 
-Parity caveat: if some batch contains NO rows visible to model f, the
-fused trainer skips model f's Adam update for that step while a
-standalone run would also skip its step-counter increment; trajectories
-can then diverge late in a bounded-steps run. At any realistic scale
-every (batch, fold-complement) cell is non-empty; the trainer raises by
-default when one isn't (``allow_empty_cells=True`` opts into the
-documented skip).
+Parity precondition: every (batch, fold-complement) cell must be
+non-empty — a batch with NO rows visible to model f would leave model f
+without an update while its step counter moves on, so the trainer raises
+instead. At any realistic scale every cell is populated.
 """
 
 from __future__ import annotations
@@ -40,25 +39,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
 from modlyn_spark.oracle.pandas_oracle import AdamState
-
-_CV_PARTIAL_SCHEMA = StructType(
-    [
-        StructField("pid", LongType()),
-        StructField("gw", ArrayType(DoubleType())),  # flattened (F*k, d)
-        StructField("gb", ArrayType(DoubleType())),  # flattened (F, k)
-        StructField("loss_sum", ArrayType(DoubleType())),  # per fold-model
-        StructField("n", ArrayType(LongType())),  # visible rows per model
-    ]
-)
+from modlyn_spark.scoring.logreg import _fit_stacked, _weights_long
 
 
 def assign_folds(
@@ -136,121 +120,35 @@ class CVLogReg:
         n_batches: int | None = None,
         max_steps: int = 3000,
         max_epochs: int = 4,
-        allow_empty_cells: bool = False,
     ) -> "CVLogReg":
-        data = df.select(features_col, label_idx_col, batch_col, fold_col)
-        if n_batches is None:
-            n_batches = data.agg(F.max(batch_col)).collect()[0][0] + 1
-        data = data.cache()
-
-        fc, lc, fdc = features_col, label_idx_col, fold_col
-        k, d, nf = self.k, self.d, self.F
-
-        def grad_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            gW = np.zeros((nf * k, d))
-            gb = np.zeros((nf, k))
-            loss_sum = np.zeros(nf)
-            n = np.zeros(nf, dtype=np.int64)
-            Wf, bf = grad_partials.Wf, grad_partials.bf
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                X = np.stack(pdf[fc].to_numpy()).astype(np.float64)
-                y = pdf[lc].to_numpy(dtype=np.int64)
-                folds = pdf[fdc].to_numpy(dtype=np.int64)
-                m = len(X)
-                logits = (X @ Wf.T + bf).reshape(m, nf, k)
-                logits -= logits.max(axis=2, keepdims=True)
-                e = np.exp(logits)
-                p = e / e.sum(axis=2, keepdims=True)  # (m, nf, k)
-                rows = np.arange(m)
-                # visibility mask: row i contributes to model f iff
-                # fold_i != f
-                vis = folds[:, None] != np.arange(nf)[None, :]  # (m, nf)
-                loss_sum += (
-                    -np.log(np.clip(p[rows, :, y], 1e-30, None)) * vis
-                ).sum(axis=0)
-                p[rows, :, y] -= 1.0
-                p *= vis[:, :, None]
-                gW += p.reshape(m, nf * k).T @ X
-                gb += p.sum(axis=0)
-                n += vis.sum(axis=0)
-            if n.sum():
-                yield pd.DataFrame(
-                    {
-                        "pid": [pid],
-                        "gw": [gW.ravel().tolist()],
-                        "gb": [gb.ravel().tolist()],
-                        "loss_sum": [loss_sum.tolist()],
-                        "n": [n.tolist()],
-                    }
-                )
-
-        step = 0
-        for _epoch in range(max_epochs):
-            if step >= max_steps:
-                break
-            for bid in range(n_batches):
-                if step >= max_steps:
-                    break
-                batch = data.where(F.col(batch_col) == bid)
-                grad_partials.Wf = self.W.reshape(nf * k, d)
-                grad_partials.bf = self.b.reshape(nf * k)
-                parts = batch.mapInPandas(
-                    grad_partials, schema=_CV_PARTIAL_SCHEMA
-                ).collect()
-                if not parts:
-                    continue
-                parts.sort(key=lambda r: r["pid"])
-                n = np.zeros(nf, dtype=np.int64)
-                gW = np.zeros((nf * k, d))
-                gb = np.zeros((nf, k))
-                loss = np.zeros(nf)
-                for r in parts:
-                    gW += np.asarray(r["gw"]).reshape(nf * k, d)
-                    gb += np.asarray(r["gb"]).reshape(nf, k)
-                    loss += np.asarray(r["loss_sum"])
-                    n += np.asarray(r["n"], dtype=np.int64)
-                if (n == 0).any() and not allow_empty_cells:
-                    empty = np.nonzero(n == 0)[0].tolist()
-                    raise ValueError(
-                        f"batch {bid} has no rows visible to fold model(s) "
-                        f"{empty}; standalone-parity breaks — pass "
-                        "allow_empty_cells=True to skip their update"
-                    )
-                gW3 = gW.reshape(nf, k, d)
-                for fi in range(nf):
-                    if n[fi] == 0:
-                        continue  # documented skip under allow_empty_cells
-                    self.W[fi] = self._optW[fi].step(
-                        self.W[fi], gW3[fi] / n[fi]
-                    )
-                    self.b[fi] = self._optb[fi].step(self.b[fi], gb[fi] / n[fi])
-                    self.losses[fi].append(float(loss[fi] / n[fi]))
-                step += 1
-        data.unpersist()
+        """Train all F fold models over a cached (features, label_idx,
+        batch_id, fold_id) DataFrame: the shared stacked trainer with the
+        fold mask. Raises ValueError when a batch has no rows visible to
+        some model (see the module's parity precondition)."""
+        _fit_stacked(
+            df,
+            self.W,
+            self.b,
+            self._optW,
+            self._optb,
+            self.losses,
+            features_col=features_col,
+            label_idx_col=label_idx_col,
+            batch_col=batch_col,
+            n_batches=n_batches,
+            max_steps=max_steps,
+            max_epochs=max_epochs,
+            fold_col=fold_col,
+        )
         return self
 
     # -- outputs -------------------------------------------------------------
 
     def weights_long(self, spark) -> DataFrame:
         """Long-form (fold, label, pos, weight) across all F models."""
-        rows = pd.DataFrame(
-            {
-                "fold": np.repeat(
-                    np.arange(self.F, dtype=np.int64), self.k * self.d
-                ),
-                "label": np.tile(
-                    np.repeat([str(c) for c in self.classes], self.d), self.F
-                ),
-                "pos": np.tile(np.arange(self.d, dtype=np.int64), self.F * self.k),
-                "weight": self.W.ravel(),
-            }
+        return _weights_long(
+            spark, self.W, self.classes, ("fold", np.arange(self.F, dtype=np.int64))
         )
-        return spark.createDataFrame(rows)
 
     def oof_predict(
         self,

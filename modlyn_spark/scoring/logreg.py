@@ -2,16 +2,23 @@
 
 Reproduces modlyn's SimpleLogReg inner loop (reference:
 modlyn/models/_simple_logreg_model.py:70-83 training_step,
-:105-108 Adam(lr, weight_decay)) as a partition-parallel tree aggregation:
+:105-108 Adam(lr, weight_decay)) as per-partition partials with a
+pid-sorted driver combine, in ONE shared stacked trainer (``_fit_stacked``)
+that trains M models at once:
 
 - the training table is cached with a deterministic batch assignment;
-- each step broadcasts the current (W, b) to executors, computes per-partition
-  gradient partials vectorized over Arrow batches (numpy GEMM — the M1
-  forward pass), and tree-combines them (executor partials -> driver final,
-  summed in a deterministic sorted order in float64);
-- the Adam update (torch parity: L2 weight decay folded into the gradient,
-  bias-corrected moments) runs on the driver — the model (k x d) is tiny next
-  to the data, the classic parameter-server-on-driver layout.
+- each step broadcasts the current (M*k, d) weight stack to executors,
+  computes per-partition gradient partials vectorized over Arrow batches
+  (one numpy GEMM for all logits, one for all gradients — the M1 forward
+  pass), and sums them on the driver in sorted partition order in float64;
+- the Adam updates (torch parity: L2 weight decay folded into the
+  gradient, bias-corrected moments) run on the driver, one state per
+  model — the model stack is tiny next to the data, the classic
+  parameter-server-on-driver layout.
+
+``DistributedLogReg`` is the M=1 call; ``scoring.regpath.RegPathLogReg``
+stacks one model per weight decay and ``scoring.cv.CVLogReg`` one model
+per held-out fold (with a row-visibility mask).
 
 Determinism: batch composition is a pure function of the row key
 (md5-derived, replicable in pandas/DuckDB), partials are float64 and summed
@@ -19,9 +26,9 @@ sorted by partition id, so two runs at different parallelism produce
 numpy.allclose-identical weights (the N-vs-4N-cluster invariant).
 
 Scale notes: per step the job reads only the current batch (the batch filter
-prunes cached in-memory partition stats; optionally pre-cluster by batch_id).
-Weights move driver<->executor once per step: O(k*d) bytes, independent of
-data size.
+prunes cached in-memory partition stats; at n_batches >= 32 the cache is
+pre-clustered by batch_id). Weights move driver<->executor once per step:
+O(M*k*d) bytes, independent of data size.
 """
 
 from __future__ import annotations
@@ -40,7 +47,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from modlyn_spark.oracle.pandas_oracle import AdamState, softmax_xent_grad
+from modlyn_spark.oracle.pandas_oracle import AdamState
 
 
 def assign_batches(
@@ -70,19 +77,187 @@ def assign_batches_pandas(
     )
 
 
-_PARTIAL_SCHEMA = StructType(
-    [
-        StructField("pid", LongType()),
-        StructField("gw", ArrayType(DoubleType())),  # flattened (k, d)
-        StructField("gb", ArrayType(DoubleType())),
-        StructField("loss_sum", DoubleType()),
-        StructField("n", LongType()),
-    ]
-)
+def _partial_schema(masked: bool) -> StructType:
+    """Per-partition partial row of the stacked trainer: M models' summed
+    gradients and losses plus the visible-row count — one count per model
+    under a fold mask, else one shared count."""
+    return StructType(
+        [
+            StructField("pid", LongType()),
+            StructField("gw", ArrayType(DoubleType())),  # flattened (M*k, d)
+            StructField("gb", ArrayType(DoubleType())),  # flattened (M, k)
+            StructField("loss_sum", ArrayType(DoubleType())),  # per model
+            StructField("n", ArrayType(LongType()) if masked else LongType()),
+        ]
+    )
+
+
+def _fit_stacked(
+    df: DataFrame,
+    W: np.ndarray,
+    b: np.ndarray,
+    optW: list,
+    optb: list,
+    losses: list[list[float]],
+    *,
+    features_col: str,
+    label_idx_col: str,
+    batch_col: str,
+    n_batches: int | None,
+    max_steps: int,
+    max_epochs: int,
+    fold_col: str | None = None,
+    epoch_callback=None,
+) -> None:
+    """Train M softmax models over one cached (features, label_idx,
+    batch_id[, fold_id]) table, updating ``W`` (M, k, d), ``b`` (M, k),
+    the M Adam states and the M loss lists in place.
+
+    Per step, one mapInPandas job over ``batch_id == bid``: each partition
+    stacks the M weight matrices into one (M*k, d) block, so ONE GEMM gives
+    every model's logits and ONE GEMM every model's gradient. Without
+    ``fold_col`` every row is visible to every model; with it, model f
+    masks out the rows of fold f and normalizes by its own visible-row
+    count. The driver sums the partials in pid order (float64,
+    deterministic at any parallelism) and runs M independent Adam steps,
+    each with its own weight decay — so model m's trajectory is exactly a
+    standalone M=1 run on its visible rows.
+
+    At ``n_batches >= 32`` the cached table is repartitioned by batch id
+    (one up-front shuffle, identical results), so each step's batch filter
+    prunes whole cached partitions instead of scanning every one.
+    """
+    cols = [features_col, label_idx_col, batch_col]
+    if fold_col is not None:
+        cols.append(fold_col)
+    data = df.select(*cols)
+    if n_batches is None:
+        top = data.agg(F.max(batch_col)).collect()[0][0]
+        if top is None:
+            raise ValueError(
+                f"empty training table: no {batch_col!r} values to infer "
+                "n_batches from"
+            )
+        n_batches = top + 1
+    if n_batches >= 32:
+        data = data.repartition(n_batches, batch_col)
+    data = data.cache()
+
+    fc, lc, fdc = features_col, label_idx_col, fold_col
+    M, k, d = W.shape
+    schema = _partial_schema(fold_col is not None)
+
+    def grad_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        gW = np.zeros((M * k, d))
+        gb = np.zeros((M, k))
+        loss_sum = np.zeros(M)
+        n = np.zeros(M, dtype=np.int64)
+        Wf, bf = grad_partials.Wf, grad_partials.bf
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            X = np.stack(pdf[fc].to_numpy()).astype(np.float64)
+            y = pdf[lc].to_numpy(dtype=np.int64)
+            m = len(X)
+            # ONE GEMM for all M models' logits: (m, M*k)
+            logits = (X @ Wf.T + bf).reshape(m, M, k)
+            logits -= logits.max(axis=2, keepdims=True)
+            e = np.exp(logits)
+            p = e / e.sum(axis=2, keepdims=True)  # (m, M, k)
+            rows = np.arange(m)
+            # advanced indices split by a slice -> (m, M): the true-class
+            # probability per row per model
+            nll = -np.log(np.clip(p[rows, :, y], 1e-30, None))
+            p[rows, :, y] -= 1.0
+            if fdc is None:
+                n += m
+            else:
+                # row i is visible to model f iff fold_i != f
+                vis = pdf[fdc].to_numpy(dtype=np.int64)[:, None] != np.arange(M)
+                nll = nll * vis
+                p *= vis[:, :, None]
+                n += vis.sum(axis=0)
+            loss_sum += nll.sum(axis=0)
+            # ONE GEMM for all M gradient blocks: (M*k, d); unnormalized
+            # sums, turned into batch means on the driver
+            gW += p.reshape(m, M * k).T @ X
+            gb += p.sum(axis=0)
+        if n.any():
+            yield pd.DataFrame(
+                {
+                    "pid": [pid],
+                    "gw": [gW.ravel().tolist()],
+                    "gb": [gb.ravel().tolist()],
+                    "loss_sum": [loss_sum.tolist()],
+                    "n": [n.tolist() if fdc is not None else int(n[0])],
+                }
+            )
+
+    try:
+        step = 0
+        for epoch in range(max_epochs):
+            if step >= max_steps:
+                break
+            for bid in range(n_batches):
+                if step >= max_steps:
+                    break
+                batch = data.where(F.col(batch_col) == bid)
+                grad_partials.Wf = W.reshape(M * k, d)
+                grad_partials.bf = b.reshape(M * k)
+                parts = batch.mapInPandas(grad_partials, schema=schema).collect()
+                if not parts:
+                    continue
+                parts.sort(key=lambda r: r["pid"])  # deterministic combine order
+                gW = np.zeros((M * k, d))
+                gb = np.zeros((M, k))
+                loss = np.zeros(M)
+                n = np.zeros(M, dtype=np.int64)
+                for r in parts:
+                    gW += np.asarray(r["gw"]).reshape(M * k, d)
+                    gb += np.asarray(r["gb"]).reshape(M, k)
+                    loss += np.asarray(r["loss_sum"])
+                    n += np.asarray(r["n"], dtype=np.int64)
+                if (n == 0).any():
+                    empty = np.nonzero(n == 0)[0].tolist()
+                    raise ValueError(
+                        f"batch {bid} has no rows visible to model(s) {empty}; "
+                        "every (batch, fold-complement) cell must be non-empty"
+                    )
+                gW3 = gW.reshape(M, k, d)
+                for mi in range(M):
+                    W[mi] = optW[mi].step(W[mi], gW3[mi] / n[mi])
+                    b[mi] = optb[mi].step(b[mi], gb[mi] / n[mi])
+                    losses[mi].append(float(loss[mi] / n[mi]))
+                step += 1
+            if epoch_callback is not None:
+                epoch_callback(epoch)
+    finally:
+        data.unpersist()
+
+
+def _weights_long(
+    spark, W: np.ndarray, classes: list, lead: tuple[str, list] | None = None
+) -> DataFrame:
+    """Long-form (label, pos, weight) rows of a (k, d) weight matrix, or of
+    an (M, k, d) stack with ``lead = (name, values)`` naming its leading
+    axis (``lam`` for the regularization path, ``fold`` for CV)."""
+    k, d = W.shape[-2:]
+    M = W.size // (k * d)
+    cols = {}
+    if lead is not None:
+        cols[lead[0]] = np.repeat(lead[1], k * d)
+    cols["label"] = np.tile(np.repeat([str(c) for c in classes], d), M)
+    cols["pos"] = np.tile(np.arange(d, dtype=np.int64), M * k)
+    cols["weight"] = W.ravel()
+    return spark.createDataFrame(pd.DataFrame(cols))
 
 
 class DistributedLogReg:
-    """Mini-batch softmax regression over a Spark DataFrame.
+    """Mini-batch softmax regression over a Spark DataFrame — the M=1 case
+    of the shared stacked trainer.
 
     Args mirror the reference defaults (modlyn/models/_simple_logreg_model.py:
     35-38 lr=1e-2 wd=1e-2; :120-123 max_epochs=4 max_steps=3000).
@@ -114,32 +289,14 @@ class DistributedLogReg:
         n_batches: int | None = None,
         max_steps: int = 3000,
         max_epochs: int = 4,
-        tree_depth: int | None = None,
-        cluster_by_batch: bool | None = None,
         epoch_callback=None,
     ) -> "DistributedLogReg":
         """Train over a cached (features, label_idx, batch_id) DataFrame.
 
-        One Spark aggregation per step: gradient partials per partition,
-        summed on the driver in sorted-partition order (deterministic),
-        then a torch-parity Adam update.
-
-        ``tree_depth``: if set, partials are combined executor-side with
-        ``RDD.treeAggregate``-style intermediate combiners before reaching
-        the driver — at 1000-executor scale the driver then receives one
-        (k x d) gradient instead of one per partition. Tree combination
-        reorders float additions, so use the default (sorted driver
-        combine) when bit-stable parity across parallelism levels matters;
-        both paths are numpy.allclose to the oracle.
-
-        ``cluster_by_batch``: repartition the cached training set by
-        batch_id before training, so each step's batch filter prunes whole
-        cached partitions (the in-memory columnar cache keeps per-batch
-        min/max stats) instead of scanning every partition per step — the
-        right layout when n_batches x steps is large relative to cluster
-        cores. Adds one up-front shuffle; results are identical. Default
-        (None) = auto: cluster when n_batches >= 32, where per-step
-        full-cache scans start to dominate.
+        One Spark aggregation per step: per-partition gradient partials,
+        summed on the driver in pid order (deterministic), then a
+        torch-parity Adam update — the shared stacked trainer at M=1.
+        ``n_batches=None`` reads it off the table (max batch id + 1).
 
         ``epoch_callback``: optional ``f(epoch_idx)`` invoked after each
         completed epoch with the model already updated — the hook the
@@ -150,132 +307,22 @@ class DistributedLogReg:
         (_simple_logreg_model.py:120-123) so direct engine callers train to
         the same budget as the facade.
         """
-        data = df.select(features_col, label_idx_col, batch_col)
-        if n_batches is None:
-            n_batches = data.agg(F.max(batch_col)).collect()[0][0] + 1
-        if cluster_by_batch is None:
-            cluster_by_batch = n_batches >= 32
-        if cluster_by_batch:
-            data = data.repartition(n_batches, batch_col)
-        data = data.cache()
-
-        fc, lc = features_col, label_idx_col
-        k, d = self.k, self.d
-
-        def grad_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            gW = np.zeros((k, d))
-            gb = np.zeros(k)
-            loss_sum = 0.0
-            n = 0
-            W, b = grad_partials.W, grad_partials.b
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                X = np.stack(pdf[fc].to_numpy()).astype(np.float64)
-                y = pdf[lc].to_numpy(dtype=np.int64)
-                # unnormalized partials: sum-of-gradients, converted to the
-                # batch-mean gradient on the driver
-                logits = X @ W.T + b
-                logits -= logits.max(axis=1, keepdims=True)
-                e = np.exp(logits)
-                p = e / e.sum(axis=1, keepdims=True)
-                loss_sum += -np.log(
-                    np.clip(p[np.arange(len(X)), y], 1e-30, None)
-                ).sum()
-                p[np.arange(len(X)), y] -= 1.0
-                gW += p.T @ X
-                gb += p.sum(axis=0)
-                n += len(X)
-            if n:
-                yield pd.DataFrame(
-                    {
-                        "pid": [pid],
-                        "gw": [gW.ravel().tolist()],
-                        "gb": [gb.tolist()],
-                        "loss_sum": [loss_sum],
-                        "n": [n],
-                    }
-                )
-
-        step = 0
-        for epoch in range(max_epochs):
-            if step >= max_steps:
-                break
-            for bid in range(n_batches):
-                if step >= max_steps:
-                    break
-                batch = data.where(F.col(batch_col) == bid)
-                grad_partials.W = self.W
-                grad_partials.b = self.b
-                partial_df = batch.mapInPandas(grad_partials, schema=_PARTIAL_SCHEMA)
-                if tree_depth is not None:
-                    parts = self._tree_combine(partial_df, tree_depth)
-                else:
-                    parts = partial_df.collect()
-                if not parts:
-                    continue
-                parts.sort(key=lambda r: r["pid"])  # deterministic combine order
-                n = sum(r["n"] for r in parts)
-                gW = np.zeros((k, d))
-                gb = np.zeros(k)
-                loss = 0.0
-                for r in parts:
-                    gW += np.asarray(r["gw"]).reshape(k, d)
-                    gb += np.asarray(r["gb"])
-                    loss += r["loss_sum"]
-                gW /= n
-                gb /= n
-                loss /= n
-                self.W = self._optW.step(self.W, gW)
-                self.b = self._optb.step(self.b, gb)
-                self.losses.append(loss)
-                step += 1
-            if epoch_callback is not None:
-                epoch_callback(epoch)
-        data.unpersist()
+        _fit_stacked(
+            df,
+            self.W[None],
+            self.b[None],
+            [self._optW],
+            [self._optb],
+            [self.losses],
+            features_col=features_col,
+            label_idx_col=label_idx_col,
+            batch_col=batch_col,
+            n_batches=n_batches,
+            max_steps=max_steps,
+            max_epochs=max_epochs,
+            epoch_callback=epoch_callback,
+        )
         return self
-
-    @staticmethod
-    def _tree_combine(partial_df: DataFrame, depth: int) -> list:
-        """Executor-side tree combination of gradient partials.
-
-        Level l groups partials by pid % (n_groups) and sums them with a
-        vectorized applyInPandas combiner, halving the row count towards the
-        driver ``depth`` times — the DataFrame rendering of
-        ``RDD.treeAggregate`` (reference inner loop G1, SURVEY.md §2.2):
-        the driver finally collects ~sqrt(P) rows instead of P.
-        """
-        import pandas as pd  # noqa: F811 (executor-side)
-
-        def combine(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            gw = np.sum(np.stack(pdf["gw"].to_numpy()), axis=0)
-            gb = np.sum(np.stack(pdf["gb"].to_numpy()), axis=0)
-            return pd.DataFrame(
-                {
-                    "pid": [int(key[0])],
-                    "gw": [gw.tolist()],
-                    "gb": [gb.tolist()],
-                    "loss_sum": [float(pdf["loss_sum"].sum())],
-                    "n": [int(pdf["n"].sum())],
-                }
-            )
-
-        out = partial_df
-        for level in range(depth):
-            fanout = 4 ** (depth - level - 1)
-            if fanout < 1:
-                break
-            out = (
-                out.withColumn("__grp", F.pmod(F.col("pid"), F.lit(max(fanout, 1))))
-                .withColumn("pid", F.col("__grp"))
-                .drop("__grp")
-                .groupBy("pid")
-                .applyInPandas(combine, schema=_PARTIAL_SCHEMA)
-            )
-        return out.collect()
 
     @classmethod
     def from_weights_long(cls, weights: pd.DataFrame) -> "DistributedLogReg":
@@ -309,14 +356,7 @@ class DistributedLogReg:
 
     def weights_long(self, spark) -> DataFrame:
         """Long-form (label, pos, weight) DataFrame for relational consumers."""
-        rows = pd.DataFrame(
-            {
-                "label": np.repeat([str(c) for c in self.classes], self.d),
-                "pos": np.tile(np.arange(self.d, dtype=np.int64), self.k),
-                "weight": self.W.ravel(),
-            }
-        )
-        return spark.createDataFrame(rows)
+        return _weights_long(spark, self.W, self.classes)
 
     def predict_df(
         self, df: DataFrame, features_col: str = "features", out_col: str = "pred_idx"

@@ -16,7 +16,9 @@ Physical design (one Spark aggregation per step, like DistributedLogReg):
   marginal cost of an extra lambda is FLOPs on data already in cache,
   not another scan of the table;
 - per-partition partials (L*k*d gradient, L*k bias gradient, L losses)
-  tree-combine exactly like the single-model trainer;
+  are summed by the pid-sorted driver combine of the one shared stacked
+  trainer (scoring/logreg.py:_fit_stacked), of which the single-model
+  trainer is the L=1 case;
 - the driver keeps L independent Adam states (weight decay folds into
   the update there, torch parity), so lambda l's trajectory is
   numerically the SAME sequence of updates a standalone
@@ -35,31 +37,12 @@ each lambda) are pure column expressions over the long-form output.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
 
 from modlyn_spark.oracle.pandas_oracle import AdamState
-
-_PATH_PARTIAL_SCHEMA = StructType(
-    [
-        StructField("pid", LongType()),
-        StructField("gw", ArrayType(DoubleType())),  # flattened (L*k, d)
-        StructField("gb", ArrayType(DoubleType())),  # flattened (L, k)
-        StructField("loss_sum", ArrayType(DoubleType())),  # per lambda
-        StructField("n", LongType()),
-    ]
-)
+from modlyn_spark.scoring.logreg import _fit_stacked, _weights_long
 
 
 class RegPathLogReg:
@@ -105,123 +88,39 @@ class RegPathLogReg:
         n_batches: int | None = None,
         max_steps: int = 3000,
         max_epochs: int = 4,
-        cluster_by_batch: bool | None = None,
     ) -> "RegPathLogReg":
         """Train all L models over a cached (features, label_idx, batch_id)
         DataFrame: one mapInPandas aggregation per step computes every
         model's gradient partials from a single traversal of the batch.
 
-        Batch order, caching, and the deterministic sorted-pid driver
-        combine mirror DistributedLogReg.fit exactly, so per-lambda
-        results are allclose to L standalone fits at the same config.
+        The shared stacked trainer with one weight decay per lambda: batch
+        order, caching and the sorted-pid driver combine are those of
+        DistributedLogReg.fit, so per-lambda results are allclose to L
+        standalone fits at the same config.
         """
-        data = df.select(features_col, label_idx_col, batch_col)
-        if n_batches is None:
-            n_batches = data.agg(F.max(batch_col)).collect()[0][0] + 1
-        if cluster_by_batch is None:
-            cluster_by_batch = n_batches >= 32
-        if cluster_by_batch:
-            data = data.repartition(n_batches, batch_col)
-        data = data.cache()
-
-        fc, lc = features_col, label_idx_col
-        k, d, L = self.k, self.d, self.L
-
-        def grad_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            gW = np.zeros((L * k, d))
-            gb = np.zeros((L, k))
-            loss_sum = np.zeros(L)
-            n = 0
-            # (L*k, d) weight stack broadcast via closure, like the
-            # single-model trainer
-            Wf, bf = grad_partials.Wf, grad_partials.bf
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                X = np.stack(pdf[fc].to_numpy()).astype(np.float64)
-                y = pdf[lc].to_numpy(dtype=np.int64)
-                m = len(X)
-                # ONE GEMM for all L models: (m, L*k)
-                logits = (X @ Wf.T + bf).reshape(m, L, k)
-                logits -= logits.max(axis=2, keepdims=True)
-                e = np.exp(logits)
-                p = e / e.sum(axis=2, keepdims=True)  # (m, L, k)
-                rows = np.arange(m)
-                # advanced indices split by a slice -> (m, L): the true-class
-                # probability per row per lambda
-                loss_sum += -np.log(
-                    np.clip(p[rows, :, y], 1e-30, None)
-                ).sum(axis=0)
-                p[rows, :, y] -= 1.0
-                # ONE GEMM for all L gradient blocks: (L*k, d)
-                gW += p.reshape(m, L * k).T @ X
-                gb += p.sum(axis=0)
-                n += m
-            if n:
-                yield pd.DataFrame(
-                    {
-                        "pid": [pid],
-                        "gw": [gW.ravel().tolist()],
-                        "gb": [gb.ravel().tolist()],
-                        "loss_sum": [loss_sum.tolist()],
-                        "n": [n],
-                    }
-                )
-
-        step = 0
-        for _epoch in range(max_epochs):
-            if step >= max_steps:
-                break
-            for bid in range(n_batches):
-                if step >= max_steps:
-                    break
-                batch = data.where(F.col(batch_col) == bid)
-                grad_partials.Wf = self.W.reshape(L * k, d)
-                grad_partials.bf = self.b.reshape(L * k)
-                parts = batch.mapInPandas(
-                    grad_partials, schema=_PATH_PARTIAL_SCHEMA
-                ).collect()
-                if not parts:
-                    continue
-                parts.sort(key=lambda r: r["pid"])  # deterministic combine
-                n = sum(r["n"] for r in parts)
-                gW = np.zeros((L * k, d))
-                gb = np.zeros((L, k))
-                loss = np.zeros(L)
-                for r in parts:
-                    gW += np.asarray(r["gw"]).reshape(L * k, d)
-                    gb += np.asarray(r["gb"]).reshape(L, k)
-                    loss += np.asarray(r["loss_sum"])
-                gW /= n
-                gb /= n
-                loss /= n
-                gW3 = gW.reshape(L, k, d)
-                for li in range(L):
-                    self.W[li] = self._optW[li].step(self.W[li], gW3[li])
-                    self.b[li] = self._optb[li].step(self.b[li], gb[li])
-                    self.losses[li].append(float(loss[li]))
-                step += 1
-        data.unpersist()
+        _fit_stacked(
+            df,
+            self.W,
+            self.b,
+            self._optW,
+            self._optb,
+            self.losses,
+            features_col=features_col,
+            label_idx_col=label_idx_col,
+            batch_col=batch_col,
+            n_batches=n_batches,
+            max_steps=max_steps,
+            max_epochs=max_epochs,
+        )
         return self
 
     # -- outputs -------------------------------------------------------------
 
     def weights_long(self, spark) -> DataFrame:
         """Long-form (lam, label, pos, weight) across the whole path."""
-        rows = pd.DataFrame(
-            {
-                "lam": np.repeat(self.lambdas, self.k * self.d),
-                "label": np.tile(
-                    np.repeat([str(c) for c in self.classes], self.d), self.L
-                ),
-                "pos": np.tile(np.arange(self.d, dtype=np.int64), self.L * self.k),
-                "weight": self.W.ravel(),
-            }
+        return _weights_long(
+            spark, self.W, self.classes, ("lam", self.lambdas)
         )
-        return spark.createDataFrame(rows)
 
     def selection_path(self, spark, threshold: float) -> DataFrame:
         """Per (lam, pos): max |weight| over classes + survives flag —

@@ -122,7 +122,10 @@ def test_oof_predictions_leakage_free(spark, cv_data):
 
 
 def test_empty_cell_raises(spark, cv_data):
-    """A batch with no rows visible to some model raises by default."""
+    """A batch with no rows visible to some model raises, and the training
+    cache is released even though fit raised."""
+    from pyspark.storagelevel import StorageLevel
+
     _, _, _, classes, enc = cv_data
     # fold everything into fold 0 for batch 3: model 0 sees nothing there
     rigged = enc.withColumn(
@@ -133,12 +136,14 @@ def test_empty_cell_raises(spark, cv_data):
         CVLogReg(D, classes, NF).fit(
             rigged, max_steps=12, max_epochs=1, n_batches=4
         )
-    # opt-out trains, skipping only the starved update
-    cv = CVLogReg(D, classes, NF).fit(
-        rigged, max_steps=12, max_epochs=1, n_batches=4, allow_empty_cells=True
-    )
-    assert len(cv.losses[0]) == 3  # fold-0 model skipped batch 3
-    assert len(cv.losses[1]) == 4
+    training = rigged.select("features", "label_idx", "batch_id", "fold_id")
+    assert training.storageLevel == StorageLevel.NONE
+
+
+def test_empty_table_raises(spark, cv_data):
+    _, _, _, classes, enc = cv_data
+    with pytest.raises(ValueError, match="empty training table"):
+        CVLogReg(D, classes, NF).fit(enc.limit(0), max_steps=3)
 
 
 def test_n_folds_guard():

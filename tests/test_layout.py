@@ -149,12 +149,22 @@ def test_written_files_prune_boxes(spark, tmp_path):
     df = spark.createDataFrame(pdf)
     zdir = str(tmp_path / "zorder")
     ldir = str(tmp_path / "lexico")
-    write_zorder_table(df, zdir, ["x", "y"], files=64)
-    (
-        df.repartitionByRange(64, "x", "y")
-        .sortWithinPartitions("x", "y")
-        .write.parquet(ldir)
-    )
+    # Sample every row (64 x 1000 >= 40k) so both layouts' range
+    # boundaries are exact quantiles. The default sample is seeded by the
+    # RDD id, so the box comparison below flipped with how many RDDs
+    # earlier tests in the session had created.
+    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    default = spark.conf.get(key)
+    spark.conf.set(key, "1000")
+    try:
+        write_zorder_table(df, zdir, ["x", "y"], files=64)
+        (
+            df.repartitionByRange(64, "x", "y")
+            .sortWithinPartitions("x", "y")
+            .write.parquet(ldir)
+        )
+    finally:
+        spark.conf.set(key, default)
 
     def extents(d):
         out = []

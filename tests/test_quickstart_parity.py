@@ -10,8 +10,16 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from pyspark.sql import functions as F
+
 from modlyn_spark.eval.jaccard import CompareScores
-from modlyn_spark.scoring.logreg import DistributedLogReg, assign_batches
+from modlyn_spark.oracle.pandas_oracle import oracle_logreg
+from modlyn_spark.scoring.cv import CVLogReg, assign_folds
+from modlyn_spark.scoring.logreg import (
+    DistributedLogReg,
+    assign_batches,
+    assign_batches_pandas,
+)
 from modlyn_spark.scoring.stats import class_feature_stats, f_statistic, label_encode
 
 N, D, K = 300, 16, 3
@@ -73,30 +81,58 @@ def test_cross_method_jaccard_agreement(spark, strong_signal):
         assert (sub["jaccard"] > base[n_top]).all()
 
 
-def test_tree_combine_matches_driver_combine(spark, strong_signal):
-    df = strong_signal
-    classes, enc = label_encode(df, "label")
-    enc = assign_batches(enc, ["row_id"], 3).repartition(8)
-
-    flat = DistributedLogReg(D, classes).fit(
-        enc, max_steps=6, n_batches=3
+@pytest.fixture(scope="module")
+def wide_batches(spark):
+    """960 rows over 32 batches x 3 folds: ~30 rows per batch, so every
+    (batch, fold-complement) cell is populated."""
+    rng = np.random.default_rng(5)
+    n, d = 960, 8
+    X = rng.random((n, d)).astype(np.float32)
+    labels = pd.Series(rng.choice([f"c{i}" for i in range(K)], size=n))
+    for i in range(K):
+        X[labels.values == f"c{i}", i] += 0.5 * (i + 1)
+    pdf = pd.DataFrame(
+        {
+            "row_id": np.arange(n),
+            "features": [x.tolist() for x in X],
+            "label": labels,
+        }
     )
-    tree = DistributedLogReg(D, classes).fit(
-        enc, max_steps=6, n_batches=3, tree_depth=2
-    )
-    assert np.allclose(flat.W, tree.W, rtol=1e-9, atol=1e-12)
-    assert np.allclose(flat.losses, tree.losses, rtol=1e-9)
+    classes, enc = label_encode(spark.createDataFrame(pdf), "label")
+    enc = assign_folds(assign_batches(enc, ["row_id"], 32), ["row_id"], 3)
+    return pdf, X, labels, classes, enc
 
 
-def test_cluster_by_batch_identical(spark, strong_signal):
-    df = strong_signal
-    classes, enc = label_encode(df, "label")
-    enc = assign_batches(enc, ["row_id"], 3)
-    a = DistributedLogReg(D, classes).fit(enc, max_steps=6, n_batches=3)
-    b = DistributedLogReg(D, classes).fit(
-        enc, max_steps=6, n_batches=3, cluster_by_batch=True
+def test_cluster_by_batch_identical(spark, wide_batches):
+    """n_batches >= 32 clusters the cached table by batch id; the weights
+    still match the numpy twin on the same batch ids."""
+    pdf, X, labels, classes, enc = wide_batches
+    model = DistributedLogReg(X.shape[1], classes).fit(
+        enc, max_steps=12, max_epochs=1, n_batches=32
     )
-    assert np.allclose(a.W, b.W, rtol=1e-9, atol=1e-12)
+    bids = assign_batches_pandas(pdf, ["row_id"], 32)
+    exp_w, exp_losses = oracle_logreg(X, labels, bids, max_steps=12, n_epochs=1)
+    exp_W = exp_w.pivot(index="label", columns="pos", values="weight").values
+    assert np.allclose(model.W, exp_W, rtol=1e-6, atol=1e-9)
+    assert np.allclose(model.losses, exp_losses, rtol=1e-6)
+
+
+def test_cv_clustered_matches_standalone_per_fold(spark, wide_batches):
+    """CVLogReg gets the same clustered layout at n_batches >= 32, and each
+    fold model still equals the standalone trainer on fold != f."""
+    _, X, _, classes, enc = wide_batches
+    cells = enc.groupBy("batch_id", "fold_id").count().toPandas()
+    assert (cells.groupby("batch_id")["fold_id"].nunique() >= 2).all()
+    cv = CVLogReg(X.shape[1], classes, 3).fit(
+        enc, max_steps=6, max_epochs=1, n_batches=32
+    )
+    for f in range(3):
+        solo = DistributedLogReg(X.shape[1], classes).fit(
+            enc.where(F.col("fold_id") != f), max_steps=6, max_epochs=1, n_batches=32
+        )
+        assert np.allclose(cv.W[f], solo.W, rtol=1e-9, atol=1e-12), f
+        assert np.allclose(cv.b[f], solo.b, rtol=1e-9, atol=1e-12), f
+        assert np.allclose(cv.losses[f], solo.losses, rtol=1e-9), f
 
 
 def test_fstat_marks_signal_features(spark, strong_signal):

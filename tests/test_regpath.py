@@ -114,6 +114,12 @@ def test_selection_path_table(spark, path_data):
     assert len(got) == len(LAMBDAS) * D
 
 
+def test_empty_table_raises(spark, path_data):
+    _, _, _, classes, enc = path_data
+    with pytest.raises(ValueError, match="empty training table"):
+        RegPathLogReg(D, classes, LAMBDAS).fit(enc.limit(0), max_steps=3)
+
+
 def test_lambdas_empty_raises():
     with pytest.raises(ValueError):
         RegPathLogReg(4, ["a", "b"], [])

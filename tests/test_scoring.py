@@ -147,6 +147,40 @@ def test_weights_long_roundtrip(spark, matrix_pdf):
     assert np.allclose(wide.values, model.W)
 
 
+def test_logreg_empty_table_raises(spark, matrix_pdf):
+    pdf, _, _ = matrix_pdf
+    classes, enc = label_encode(_spark_df(spark, pdf), "label")
+    enc = assign_batches(enc, ["row_id"], 2)
+    with pytest.raises(ValueError, match="empty training table"):
+        DistributedLogReg(D, classes).fit(enc.limit(0), max_steps=3)
+
+
+def test_trainers_one_job_per_step(spark, matrix_pdf):
+    """With n_batches given, every trainer (single model, regularization
+    path, fold-parallel CV) runs exactly one Spark job per Adam step."""
+    from modlyn_spark.scoring.cv import CVLogReg, assign_folds
+    from modlyn_spark.scoring.regpath import RegPathLogReg
+
+    pdf, _, _ = matrix_pdf
+    classes, enc = label_encode(_spark_df(spark, pdf), "label")
+    enc = assign_folds(assign_batches(enc, ["row_id"], 4), ["row_id"], 3)
+    sc = spark.sparkContext
+    trainers = {
+        "logreg": lambda: DistributedLogReg(D, classes),
+        "regpath": lambda: RegPathLogReg(D, classes, [1e-3, 1e-1]),
+        "cv": lambda: CVLogReg(D, classes, 3),
+    }
+    for name, make in trainers.items():
+        group = f"one-job-per-step-{name}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            model = make().fit(enc, max_steps=6, max_epochs=2, n_batches=4)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert np.shape(model.losses)[-1] == 6, name  # 6 Adam steps
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6, name
+
+
 def test_wilcoxon_vs_oracle(spark, matrix_pdf):
     from modlyn_spark.oracle.pandas_oracle import oracle_wilcoxon
     from modlyn_spark.scoring.stats import wilcoxon_scores
